@@ -191,6 +191,15 @@ def descendants(root: int | None = None) -> list[int]:
     return out
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of the whole machine since boot, from
+    /proc/stat. Steal is time the hypervisor gave to other guests while one
+    of this machine's CPUs wanted to run."""
+    with open("/proc/stat", encoding="ascii") as f:
+        ticks = [int(x) for x in f.readline().split()[1:9]]
+    return (ticks[7] if len(ticks) > 7 else 0), sum(ticks)
+
+
 def peak_rss_mb(root: int | None = None) -> dict[str, float]:
     """Peak resident set (VmHWM) in MB of ``root`` (the driver), the JVM and
     the Python workers below it, plus their sum under "total"."""

@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
 """Seeded benchmark of the extraction engine.
 
-    python3 perfbench/run.py --workload fused_completo --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload fused_completo --seed 1 --seconds 14 --trace 0
     python3 perfbench/run.py --workload all --seed 1 --trace 1   # every workload
     python3 perfbench/run.py --selftest                         # checker + parser tests
 
 One run is one closed-loop client: one batch job in flight at a time, on at
-most ``local[4]``. Untimed warm-up jobs (three in the fresh JVM, one after a
+most ``local[4]``. Untimed warm-up jobs (four in the fresh JVM, one after a
 context restart) run before any timed job. An untraced run times its jobs in
 one fresh JVM at local[4] (context A), then restarts the context twice more,
 so ``setup_s`` (session start plus a worker warm-up task per core) is the
@@ -150,7 +150,8 @@ class Workload:
     mode = "documento_completo"
     # untimed jobs in the fresh JVM before timing starts: the first jobs run
     # well above steady state while the JIT and Spark's code caches fill
-    warm_jobs = 3
+    # (with three, the first timed jobs still ran 5-15 % slow)
+    warm_jobs = 4
 
     def __init__(self, name: str, seed: int):
         import pandas as pd
@@ -322,18 +323,25 @@ CLASSES = {"fused_completo": FusedCompleto, "text_ops": TextOps}
 # ---------------------------------------------------------------- the run
 
 
-def _timed_loop(wl: Workload, spark, budget_s: float, min_jobs: int) -> list[float]:
+def _timed_loop(wl: Workload, spark, budget_s: float,
+                min_jobs: int) -> tuple[list[float], list[float]]:
     """Run the job back to back until at least ``min_jobs`` ran and the next
-    one would overrun the budget. Each check runs after its job, untimed."""
+    one would overrun the budget. Each check runs after its job, untimed.
+    Returns each job's wall time and the share of the machine's CPU time
+    the hypervisor stole while it ran."""
     start = time.perf_counter()
     walls: list[float] = []
+    steals: list[float] = []
     while (len(walls) < min_jobs
            or (time.perf_counter() - start) + statistics.median(walls) <= budget_s):
+        s0, n0 = ledger.cpu_ticks()
         t0 = time.perf_counter()
         check = wl.job(spark)
         walls.append(time.perf_counter() - t0)
+        s1, n1 = ledger.cpu_ticks()
+        steals.append((s1 - s0) / max(1, n1 - n0))
         check()
-    return walls
+    return walls, steals
 
 
 def _median(xs) -> float:
@@ -362,6 +370,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> int:
                 ("S2", CORES, None, 0, 0, 0.0), ("S3", CORES, None, 0, 0, 0.0)]
     sessions = Sessions()
     walls: dict[str, list[float]] = {}
+    steals: dict[str, list[float]] = {}
     probe: dict = {}
     try:
         for ctx, cores, eventlog, warm_jobs, min_jobs, share in plan:
@@ -378,7 +387,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> int:
                 wl.plan_s.clear()
                 wl.plan_jobs.clear()
             if min_jobs:
-                walls[ctx] = _timed_loop(wl, spark, seconds * share, min_jobs)
+                walls[ctx], steals[ctx] = _timed_loop(wl, spark, seconds * share, min_jobs)
         if trace and isinstance(wl, FusedCompleto):
             probe = wl.checkpoint_probe(spark)
     finally:
@@ -398,6 +407,8 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> int:
             "peak_rss_mb": rss["total"],
         }
         extra = {}
+    # host noise: the share of CPU time the hypervisor gave to other guests
+    extra["host.steal_frac"] = _median(x for v in steals.values() for x in v)
     extra.update({f"rss.{k}_mb": v for k, v in rss.items() if k != "total"})
     extra.update({"failed_frac": wl.failed / max(1, wl.attempted), "docs": wl.n_docs,
                   "jobs_timed": sum(len(w) for w in walls.values())})
@@ -406,7 +417,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> int:
         print(f"{workload:15s} {k:40s} {v:16.6f} {_unit(k)}")
     for p in wl.problems[:10]:
         print(f"{workload:15s} PROBLEM {p}")
-    _save(workload, seed, trace, shown, walls, setups)
+    _save(workload, seed, trace, shown, walls, steals, setups)
     shutil.rmtree(ev_root, ignore_errors=True)
     correct = wl.failed == 0
     print(json.dumps({
@@ -498,13 +509,13 @@ def _trace_metrics(wl: Workload, ev_root: str, walls: dict, setups: list[dict]) 
 
 
 def _save(workload: str, seed: int, trace: bool, shown: dict, walls: dict,
-          setups: list[dict]) -> None:
+          steals: dict, setups: list[dict]) -> None:
     d = os.path.join(WORK, "ledger")
     os.makedirs(d, exist_ok=True)
     with open(os.path.join(d, f"{workload}-s{seed}-t{int(trace)}.json"), "w") as f:
         json.dump({"workload": workload, "seed": seed, "trace": trace,
                    "property": inputs.PROPERTY[workload], "metrics": shown,
-                   "walls": walls, "setups": setups}, f, indent=1)
+                   "walls": walls, "steals": steals, "setups": setups}, f, indent=1)
 
 
 def run_all(seed: int, seconds: float, trace: bool) -> int:
@@ -530,7 +541,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", choices=WORKLOADS + ("all",))
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=12)
+    ap.add_argument("--seconds", type=float, default=14)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--selftest", action="store_true")
     a = ap.parse_args(argv)

@@ -141,3 +141,10 @@ def test_fixture_totals_by_job_group():
 def test_peak_rss_counts_this_process():
     rss = ledger.peak_rss_mb()
     assert rss["driver"] > 10 and rss["total"] >= rss["driver"]
+
+
+def test_cpu_ticks_are_monotone():
+    s0, n0 = ledger.cpu_ticks()
+    s1, n1 = ledger.cpu_ticks()
+    assert 0 <= s0 <= n0 and s1 >= s0 and n1 >= n0
+
