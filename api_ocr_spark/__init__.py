@@ -15,9 +15,17 @@ sources/    table loaders + interleaved-span synthesis + media store
 operators/  DataFrame pipeline stages (explode/join/ocr/reassemble/dedup/...)
 plans/      session builder, checkpoint/lineage/metrics
 streaming/  Structured Streaming variant of the extraction pipeline
+zipcache    stat-keyed zip-directory reuse across the workers' per-task
+            import-cache invalidation (installed below)
 
 Design rule (BASELINE.json input_hint): pyspark.sql DataFrame + vectorized
 pandas/Arrow UDFs throughout; no per-row Python UDFs.
 """
 
 __version__ = "0.1.0"
+
+# Spark workers invalidate import caches before every task; keep zip
+# directories (pyspark.zip, py4j, the Spark jar) unless the archive changed.
+from . import zipcache as _zipcache
+
+_zipcache.install()

@@ -217,9 +217,14 @@ def _extract_words(ink: np.ndarray, binary: np.ndarray) -> list[dict]:
                 chars.append(ch)
                 confs.append(conf)
             text = "".join(chars)
-            # sum/len, not np.mean: identical IEEE result for these sizes
-            # (sequential float64 adds; numpy pairwise summation starts at
-            # 128 elements) without the per-word array allocation
+            # sum/len, not np.mean, saves the per-word array allocation. The
+            # two are NOT provably bit-identical: numpy sums float64 with an
+            # 8-way unrolled set of accumulators from n >= 8, while sum() adds
+            # sequentially, so an 8+ glyph word can differ by an ulp. That
+            # matters only at a round(., 2) or CONF_FLOOR boundary; exactness
+            # rests on the media sweep (all ocr_* + media_manifest through
+            # check_oracle at sf0.01 and sf0.1, 0 mismatches), not on
+            # summation order.
             conf = (sum(confs) / len(confs)) if confs else 0.0
             if conf <= CONF_FLOOR or not text.strip():
                 continue
